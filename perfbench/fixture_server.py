@@ -138,17 +138,17 @@ class _Handler(BaseHTTPRequestHandler):
 
 
 class FixtureServer(HTTPServer):
-    """HTTP server over a :class:`FixtureSite` with at most ``workers``
-    handler threads. Use as a context manager; ``reset()`` clears the
+    """HTTP server over a :class:`FixtureSite` with one handler thread per
+    CPU. Use as a context manager; ``reset()`` clears the
     flaky-page hit counts and the counters between crawls."""
 
     request_queue_size = 512
     allow_reuse_address = True
 
-    def __init__(self, fixtures_dir: str, workers: int | None = None):
+    def __init__(self, fixtures_dir: str):
         super().__init__(("0.0.0.0", 0), _Handler)
         self.site = FixtureSite(fixtures_dir, self.server_address[1])
-        self._pool = ThreadPoolExecutor(max_workers=workers or os.cpu_count() or 1)
+        self._pool = ThreadPoolExecutor(max_workers=os.cpu_count() or 1)
         self._lock = threading.Lock()
         self._thread: threading.Thread | None = None
         self.reset()

@@ -140,20 +140,27 @@ def phase_windows(wave: dict) -> list[tuple[str, float, float]]:
 
 
 # Below this spread of wave sizes (URLs) the per-row work (~0.3 ms/URL)
-# is smaller than wave-to-wave noise, so the intercept is not resolved.
+# is smaller than wave-to-wave noise, so the fit cannot separate the floor
+# from the row cost.
 FIT_MIN_RANGE = 1000
+
+
+def row_cost_resolved(waves: list[dict]) -> bool:
+    x = [w["scheduled"] for w in waves if not w["cold"]]
+    return len(x) >= 2 and max(x) - min(x) >= FIT_MIN_RANGE
 
 
 def engine_metrics(waves: list[dict]) -> dict[str, float]:
     """Floor and row cost from a line fit of wave wall time on scheduled
-    URLs over every wave but the cold first one. When the waves are too
-    alike in size for the fit to separate the two, the floor is the median
-    wave instead of the intercept."""
-    x = np.array([w["scheduled"] for w in waves[1:]], dtype=float)
-    y = np.array([w["span_s"] for w in waves[1:]], dtype=float)
-    slope, floor = np.polyfit(x, y, 1) if len(x) >= 2 and np.ptp(x) > 0 else (0.0, y.mean())
-    if np.ptp(x) < FIT_MIN_RANGE:
-        floor = np.median(y)
+    URLs over the warm waves (the cold first wave and the cold wave after
+    the resume left out). When the warm waves are too alike in size for a
+    fit, the floor is their median wave and the row cost is the slope
+    through them, which ``row_cost_resolved`` reports as unresolved."""
+    warm = [w for w in waves if not w["cold"]]
+    x = np.array([w["scheduled"] for w in warm], dtype=float)
+    y = np.array([w["span_s"] for w in warm], dtype=float)
+    slope = np.polyfit(x, y, 1)[0] if np.ptp(x) > 0 else 0.0
+    floor = y.mean() - slope * x.mean() if row_cost_resolved(waves) else np.median(y)
     out = {
         "engine.wave_floor_s": float(floor),
         "engine.row_cost_ms": float(slope) * 1000,
@@ -214,7 +221,7 @@ def noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def layer_metrics(spark, tracer: Tracer, crawl, w, fx: str, server) -> dict[str, float]:
+def layer_metrics(spark, tracer: Tracer, crawl, fx: str, server) -> dict[str, float]:
     """Each layer called on its own after the crawl, over the run's own
     inputs: its pages, its largest wave's candidates, its images, its
     stores."""
@@ -323,7 +330,7 @@ def layer_metrics(spark, tracer: Tracer, crawl, w, fx: str, server) -> dict[str,
     return m
 
 
-def fetch_metrics(spark, tracer: Tracer, crawl, w, fx: str) -> dict[str, float]:
+def fetch_metrics(spark, tracer: Tracer, crawl, fx: str) -> dict[str, float]:
     """crawl_polite: the fixture server's counters over the crawl.
     crawl_wide never fetches over HTTP, so its fetch layer is called on its
     own: ``live_fetch`` and ``live_fetch_robots`` over its first 2,000

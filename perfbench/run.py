@@ -30,26 +30,11 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
-UNITS = {
-    "setup_s": "s", "crawl_s": "s", "urls_per_s": "1/s", "images_per_s": "1/s",
-    "wave_s.p50": "s", "resume_s": "s", "cpu_s": "s", "worker_rss_peak_mb": "MB",
-}
-
-
-def unit_of(name: str) -> str:
-    if name in UNITS:
-        return UNITS[name]
-    if name.endswith("_mb"):
-        return "MB"
-    if name.endswith("_ms"):
-        return "ms"
-    if name.endswith("_per_s"):
-        return "1/s"
-    if name.endswith("_s"):
-        return "s"
-    if name.endswith(("_frac", "_ratio", "_per_host")):
-        return "1"
-    return "count"
+def units() -> dict[str, str]:
+    """Metric name -> unit, as BENCHMARK.json declares them."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    return {m["name"]: m["unit"] for m in spec["end_to_end"] + spec["per_layer"]}
 
 
 def note(kind: str, payload) -> None:
@@ -169,8 +154,8 @@ def main() -> int:
         c = crawls[-1]
         per_layer = {}
         if trace:
-            per_layer.update(tr.fetch_metrics(spark, tracer, c, w, fx))
-            per_layer.update(tr.layer_metrics(spark, tracer, c, w, fx, server))
+            per_layer.update(tr.fetch_metrics(spark, tracer, c, fx))
+            per_layer.update(tr.layer_metrics(spark, tracer, c, fx, server))
             rss.sample()
         errors = sum(wl.error_rows(x) for x in crawls)
         stop_spark(spark)
@@ -189,7 +174,8 @@ def main() -> int:
         "cpu_s": med(x.cpu_s for x in crawls),
         "worker_rss_peak_mb": rss.worker_kb / 1024,
     }
-    hist = [h for h in past if h["workload"] == w.name and not h["trace"]]
+    key = wl.fixture_key(w)
+    hist = [h for h in past if h.get("key") == key and not h["trace"]]
     note("host", {
         "time": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         "position": len(past) + 1, "workload": w.name, "seed": args.seed,
@@ -224,6 +210,12 @@ def main() -> int:
             "overhead_s": round(e2e["crawl_s"] - med(base), 3) if base else None,
             "untraced_runs": len(base),
         })
+        if not tr.row_cost_resolved(c.waves):
+            note("unresolved", {
+                "engine.row_cost_ms": f"warm waves span under {tr.FIT_MIN_RANGE} URLs; "
+                                      "the value is the slope through them, and the "
+                                      "floor is their median",
+            })
         note("dropped", {
             "query.<name>_s": "corpus_queries is not a workload of this benchmark "
                               "(see perfbench/README.md)",
@@ -232,16 +224,18 @@ def main() -> int:
     else:
         metrics = e2e
     with open(os.path.join(work, "history.jsonl"), "a") as f:
-        f.write(json.dumps({"workload": w.name, "seed": args.seed, "trace": args.trace,
-                            "crawl_s": e2e["crawl_s"], "correct": not problems}) + "\n")
+        f.write(json.dumps({"workload": w.name, "key": key, "seed": args.seed,
+                            "trace": args.trace, "crawl_s": e2e["crawl_s"],
+                            "correct": not problems}) + "\n")
     for d in os.listdir(run_root):
         if d.startswith("crawl"):
             shutil.rmtree(os.path.join(run_root, d), ignore_errors=True)
+    unit = units()
     print(json.dumps({
         "correct": not problems,
         "attempted": attempted,
         "failed": failed,
-        "metrics": {k: {"value": float(v), "unit": unit_of(k)} for k, v in metrics.items()},
+        "metrics": {k: {"value": float(v), "unit": unit[k]} for k, v in metrics.items()},
     }))
     return 0 if not problems else 1
 

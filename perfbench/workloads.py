@@ -10,6 +10,7 @@ computed once per seed and cached beside the fixture.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 import statistics
@@ -25,38 +26,43 @@ import pyarrow.parquet as pq
 from host import PeakRss, steal_ticks, tree_cpu_s
 
 
+# A fresh CrawlEngine reopens the store after this many waves (resume_s).
+# The wave after it is cold again, like the first, so both stay out of the
+# floor/row-cost fit (layers.engine_metrics), which then runs over the
+# largest wave and the smallest.
+RESUME_AT = 1
+
+# The live leg's per-host Delay: with the engine's 1 s wave window, 2 URLs
+# per host per wave.
+DELAY_SEC = 0.5
+
+
 @dataclass(frozen=True)
 class Workload:
     name: str
     hosts: int
     depth: int
     images: int
-    flaky_frac: float
     live: bool
-    # wave after which a fresh CrawlEngine reopens the store (resume_s)
-    resume_at: int
-    delay_sec: float | None = None
-    # crawl_polite: this many pages fail once; no other page is flaky
-    flaky_pages: int = 0
+    # this many hosts' /p/3 fails once; no other page is flaky
+    flaky_hosts: int
 
 
 WORKLOADS = {
     # Synthetic fetch leg, no rules. 1,200 hosts at depth 2: waves of
-    # 1.2k, 3.6k and 10.8k URLs, then one small wave of retries and their
-    # children.
+    # 1.2k, 3.6k and 10.8k URLs (the third carrying the retries), then the
+    # retried pages' 36 children.
     "crawl_wide": Workload(
-        "crawl_wide", hosts=1200, depth=2, images=1024, flaky_frac=0.001,
-        live=False, resume_at=2,
+        "crawl_wide", hosts=1200, depth=2, images=1024, live=False, flaky_hosts=12,
     ),
     # Live leg against the in-process fixture server: 16 loopback hosts at
-    # depth 1, robots on, Delay 0.5 s per host (2 URLs per host per wave):
-    # the roots, then two waves of children; the third also carries the
-    # retries of pages that failed in the second.
+    # depth 1, robots on, Delay DELAY_SEC per host: the roots, two waves of
+    # children, then the three retries.
     "crawl_polite": Workload(
-        "crawl_polite", hosts=16, depth=1, images=256, flaky_frac=0.0,
-        live=True, resume_at=2, delay_sec=0.5, flaky_pages=3,
+        "crawl_polite", hosts=16, depth=1, images=256, live=True, flaky_hosts=3,
     ),
 }
+
 
 def config(w: Workload):
     from goribot_spark.engine import CrawlConfig
@@ -65,7 +71,7 @@ def config(w: Workload):
     if w.live:
         return CrawlConfig(
             fetch_mode="live", robots=True, retry_max=2, max_waves=64,
-            rules=[LimitRule("*", delay_sec=w.delay_sec)],
+            rules=[LimitRule("*", delay_sec=DELAY_SEC)],
         )
     return CrawlConfig(retry_max=2, max_waves=64)
 
@@ -77,30 +83,41 @@ def seed_urls(w: Workload) -> list[str]:
 # -- inputs and expected outputs -------------------------------------------
 
 
-def _fail_once(fx: str, w: Workload, seed: int) -> None:
-    """Flaky pages fail once, not the generator's twice, so the retry tail
-    is one wave. crawl_wide keeps the generator's seeded choice of flaky
-    pages. crawl_polite pins exactly ``flaky_pages`` of them, each the
-    second child (/p/2) of a host other than site0 (the hot host) and site1
-    (whose robots.txt blocks /p/1): each is fetched in the second wave and
-    retried in the third beside its host's last page, so every seed crawls
-    in the same three waves."""
+def _pin_flaky(fx: str, w: Workload, seed: int) -> None:
+    """Make exactly ``w.flaky_hosts`` pages flaky, each the third child
+    (/p/3) of a host other than site0 (the hot host, fanout 4) and site1
+    (whose robots.txt blocks /p/1*), and each failing once. Every seed then
+    crawls in the same waves: crawl_wide fetches /p/3 in the second wave,
+    retries it in the third and fetches its children in the fourth;
+    crawl_polite, at 2 URLs per host per wave, fetches it in the third wave
+    and retries it in the fourth."""
     path = f"{fx}/pages.parquet"
     t = pq.read_table(path)
-    fail = [min(f, 1) for f in t.column("fail_times").to_pylist()]
-    if w.flaky_pages:
-        rng = np.random.default_rng(seed)
-        hosts = rng.choice(np.arange(2, w.hosts), size=w.flaky_pages, replace=False)
-        flaky = {f"http://site{h}.test/p/2" for h in hosts}
-        fail = [int(u in flaky) for u in t.column("url").to_pylist()]
+    rng = np.random.default_rng(seed)
+    hosts = rng.choice(np.arange(2, w.hosts), size=w.flaky_hosts, replace=False)
+    flaky = {f"http://site{h}.test/p/3" for h in hosts}
+    fail = [int(u in flaky) for u in t.column("url").to_pylist()]
     i = t.schema.get_field_index("fail_times")
     pq.write_table(t.set_column(i, "fail_times", pa.array(fail, pa.int32())), path)
 
 
+def fixture_key(w: Workload) -> str:
+    """Hash of what the fixture and its expected outputs are made from: the
+    workload, the simulator's arguments and the generator, simulator and
+    workload sources. A change to any of them builds a fresh fixture."""
+    cfg = config(w)
+    h = hashlib.sha256(repr((w, cfg.rules, cfg.retry_max, cfg.robots, cfg.ua)).encode())
+    for src in ("goribot_spark/sources/fixtures.py", "tests/reference_sim.py", __file__):
+        with open(src, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()[:12]
+
+
 def prepare(work: str, w: Workload, seed: int) -> str:
     """Fixture dir for (workload, seed) with ``expected_*.parquet`` beside
-    it; built once and reused by later runs with the same seed."""
-    fx = os.path.join(work, "fixtures", f"{w.name}-{seed}")
+    it; built once and reused by later runs with the same seed and
+    fixture key."""
+    fx = os.path.join(work, "fixtures", f"{w.name}-{seed}-{fixture_key(w)}")
     if os.path.exists(os.path.join(fx, "expected_items.parquet")):
         return fx
     from goribot_spark.sources.fixtures import generate_all
@@ -109,9 +126,9 @@ def prepare(work: str, w: Workload, seed: int) -> str:
     shutil.rmtree(tmp, ignore_errors=True)
     generate_all(
         tmp, n_hosts=w.hosts, depth=w.depth, n_images=w.images, seed=seed,
-        max_refs=5, flaky_frac=w.flaky_frac,
+        max_refs=5, flaky_frac=0.0,
     )
-    _fail_once(tmp, w, seed)
+    _pin_flaky(tmp, w, seed)
     sys.path.insert(0, os.path.join(os.getcwd(), "tests"))
     from reference_sim import simulate
 
@@ -194,7 +211,7 @@ def run_crawl(spark, w: Workload, fx: str, run_root: str, tracer, rss: PeakRss,
     with tracer.span("crawl") as crawl_span:
         t_resume = None
         while True:
-            if len(waves) == w.resume_at and t_resume is None:
+            if len(waves) == RESUME_AT and t_resume is None:
                 t_resume = time.time()
                 with tracer.span("resume.open"):
                     _drop(eng)
@@ -209,8 +226,11 @@ def run_crawl(spark, w: Workload, fx: str, run_root: str, tracer, rss: PeakRss,
             r["candidates"] = (
                 int(eng.store.manifest["driver_state"]["seq_base"]) - base
             )
+            # the first wave and the first after the resume run on a fresh
+            # engine, which builds its caches in that wave
+            r["cold"] = len(waves) in (0, RESUME_AT)
             waves.append(r)
-            if len(waves) == w.resume_at + 1:
+            if len(waves) == RESUME_AT + 1:
                 resume_s = sp.end - t_resume
     cpu = tree_cpu_s() - cpu0
     fetch = server.counters() if server is not None else None
@@ -234,6 +254,8 @@ def check(c: Crawl, w: Workload, fx: str, server=None) -> list[str]:
     Returns a list of problems (empty when correct)."""
     to_live = server.site.url if server else (lambda u: u)
     problems = []
+    if len(c.waves) <= RESUME_AT:
+        problems.append(f"crawl drained in {len(c.waves)} waves, before the resume")
     exp_f = pq.read_table(f"{fx}/expected_fetches.parquet").to_pydict()
     want = Counter(
         (to_live(u), d, a)
