@@ -466,14 +466,21 @@ def q_image_caption_joint_dedup(spark, sf_dir):
     image+caption corpus (the north rule's input table): a pair is a
     duplicate only if the IMAGES collide (pHash hamming ≤ 3 via the banded
     self-join, exactly ``q_image_phash_pairs``'s candidate machinery) AND
-    the CAPTIONS agree (exact 3-gram Jaccard ≥ 0.5 on the full text).
-    Pixel-identical hero images with rewritten captions (or vice versa)
-    survive — dropping either leg over-deletes at corpus scale. Composes
-    the two existing generators; the only added shuffle is the caption
-    shingle join onto the (already small) verified image-pair set, so the
-    100 TB posture is inherited: pairs ≪ corpus, shingles join by id."""
+    the CAPTIONS agree (``caption_agreeing_pairs``). Pixel-identical hero
+    images with rewritten captions (or vice versa) survive — dropping
+    either leg over-deletes at corpus scale. Composes the two existing
+    generators; the only added shuffle is the caption shingle join onto
+    the (already small) verified image-pair set, so the 100 TB posture is
+    inherited: pairs ≪ corpus, shingles join by id."""
     pairs = q_image_phash_pairs(spark, sf_dir).localCheckpoint(eager=False)
-    d = _t(spark, sf_dir, "documents")
+    return caption_agreeing_pairs(spark, pairs, _t(spark, sf_dir, "documents"))
+
+
+def caption_agreeing_pairs(spark, pairs: DataFrame, docs: DataFrame) -> DataFrame:
+    """The (id_a, id_b, hamming) image pairs whose captions (``docs.text``
+    by ``doc_id``) agree: exact 3-gram Jaccard ≥ 0.5 on the full text.
+    Captions shorter than 3 tokens on both sides have no shingles; their
+    Jaccard is 1.0 when the token arrays are equal and 0.0 otherwise."""
     # Shingle ONLY the pair members: the verified image-pair set is ≪ the
     # corpus (bucket-capped), so a semi-join before the shingle UDF prunes
     # the caption tokenization from O(corpus) to O(pairs) — at the 100 TB
@@ -485,29 +492,40 @@ def q_image_caption_joint_dedup(spark, sf_dir):
         .distinct()
     )
     sh = (
-        d.join(ids, "doc_id")
+        docs.join(ids, "doc_id")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select("doc_id", tokens(F.col("text")).alias("_toks"))
         .select(
             "doc_id",
+            "_toks",
             F.array_distinct(shingles_from_tokens(F.col("_toks"), 3)).alias("sh"),
         )
     )
+    union = F.size(F.array_union("sh_a", "sh_b"))
     return (
         pairs.join(
-            sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")),
+            sh.select(
+                F.col("doc_id").alias("id_a"),
+                F.col("_toks").alias("toks_a"),
+                F.col("sh").alias("sh_a"),
+            ),
             "id_a",
         )
         .join(
-            sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")),
+            sh.select(
+                F.col("doc_id").alias("id_b"),
+                F.col("_toks").alias("toks_b"),
+                F.col("sh").alias("sh_b"),
+            ),
             "id_b",
         )
         .withColumn(
             "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                4,
+            F.when(
+                union == 0,
+                F.when(F.col("toks_a") == F.col("toks_b"), 1.0).otherwise(0.0),
+            ).otherwise(
+                F.round(F.size(F.array_intersect("sh_a", "sh_b")) / union, 4)
             ),
         )
         .where(F.col("jaccard") >= 0.5)
@@ -1216,14 +1234,17 @@ def oracle_sql() -> dict[str, str]:
             with img as ({_IMAGE_PHASH_SQL}),
             toks as (select doc_id, {_TOKS} w from documents),
             sh as (
-              select doc_id,
+              select doc_id, w,
                 case when len(w) < 3 then [] else {_SHINGLES} end s
               from toks
             )
             select * from (
               select p.id_a, p.id_b, p.hamming,
-                round(len(list_intersect(a.s, b.s))::DOUBLE
-                      / len(list_distinct(a.s || b.s)), 4) jaccard
+                case when len(list_distinct(a.s || b.s)) = 0
+                  then case when a.w = b.w then 1.0 else 0.0 end::DOUBLE
+                  else round(len(list_intersect(a.s, b.s))::DOUBLE
+                             / len(list_distinct(a.s || b.s)), 4)
+                end jaccard
               from img p
               join sh a on a.doc_id = p.id_a
               join sh b on b.doc_id = p.id_b

@@ -86,18 +86,12 @@ def bench_crawl(spark) -> dict:
     shutil.rmtree(run_dir, ignore_errors=True)
     # max_waves is a safety cap, not the expected count: BFS depth+1 waves
     # plus a retry tail (flaky pages re-enter up to 2 later waves each).
-    # SPARK_GRAFT_BLOOM=single|sharded turns on the Bloom pre-filter over
-    # the seen anti-join (scripts/bloom_bench.py uses this to measure the
-    # 10^10-path's cost/benefit at bench scale — r4 verdict ask #2).
-    bloom = os.environ.get("SPARK_GRAFT_BLOOM", "")
     # SPARK_GRAFT_COMPACT_EVERY=N folds the store every N waves during the
     # crawl (scripts/compact_crawl_bench.py measures the in-crawl cost of
     # the fold next to its measured resume-read win — r4 verdict ask #8).
     cfg = CrawlConfig(
         retry_max=2,
         max_waves=48,
-        use_bloom=bloom in ("single", "sharded"),
-        bloom_sharded=bloom == "sharded",
         compact_every_waves=int(os.environ.get("SPARK_GRAFT_COMPACT_EVERY", "0")),
     )
     eng = CrawlEngine(spark, fx, run_dir, cfg)

@@ -4,7 +4,7 @@ Re-expresses the query/data-processing capabilities of the reference crawler
 (zhshch2002/goribot, read-only at /root/reference) as an idiomatic Spark
 DataFrame pipeline: a partitioned parquet ``frontier`` table replaces the
 in-memory task queue (reference scheduler.go:26-74), an anti-join against a
-``seen`` table (+ Bloom pre-filter) replaces ReqDeduplicate
+``seen`` table replaces ReqDeduplicate
 (extensions.go:288-309), and per-host politeness budgets computed with window
 functions replace the Limiter's wall-clock throttles (limiter.go:50-153).
 

@@ -99,22 +99,6 @@ class CrawlConfig:
     fetch_mode: str = "synthetic"
     fetch_timeout_sec: float = 5.0
     fetch_threads: int = 8
-    # Approximate pre-filter over seen (operators/bloom.py). Measured
-    # default decision (BENCH/bloom_bench.json): OFF — while seen still
-    # broadcasts, the per-wave probe crossing is pure overhead (+21% wall
-    # at bench scale). Enable (with bloom_sharded) once seen outgrows the
-    # broadcast bar (~10^8+ rows): the probe proved 97% of candidates
-    # fresh with 0 false positives, cutting the exact anti-join's shuffle
-    # input to ~3% at the 10^10 posture. Output identical either way.
-    use_bloom: bool = False
-    bloom_bits: int = 1 << 23  # TOTAL bits (split across shards when sharded)
-    # Bucket-sharded filter (the 10^10-frontier path): per-shard bitmaps
-    # built partition-locally into the bloom_shards table and probed via a
-    # shard-cogrouped Arrow UDF — no driver-side bitmap collect/OR and no
-    # monolithic broadcast (a 10^10-key filter is ~12 GiB; neither fits the
-    # driver). Output stays byte-identical to exact dedup either way.
-    bloom_sharded: bool = False
-    bloom_shards: int = 16
     dfs: bool = False  # SetDepthFirst — extensions.go:262-269
     robots: bool = False  # RobotsTxt — extensions.go:131-151
     ua: str = "goribot-spark"
@@ -209,11 +193,6 @@ class CrawlEngine:
             self.robots = spark.read.parquet(f"{fixtures_dir}/robots_rules.parquet")
         else:
             self.robots = None
-        self._bloom = (
-            self.store.load_bloom_union()
-            if (self.cfg.dedup and self.cfg.use_bloom and not self.cfg.bloom_sharded)
-            else None
-        )
         # Incremental crawl-state caches: pending frontier and seen set as
         # lazily-localCheckpoint'ed frames updated with each wave's deltas.
         # Rebuilding them from the store each wave re-lists and re-reads
@@ -230,46 +209,22 @@ class CrawlEngine:
         return self._seen
 
     def _dedup(self, df):
-        shards = (
-            self.store.read("bloom_shards")
-            if (self.cfg.dedup and self.cfg.use_bloom and self.cfg.bloom_sharded)
-            else None
-        )
-        return dedup_against_seen(
-            df,
-            self._seen_frame(),
-            self.spark,
-            self._bloom,
-            self.cfg.bloom_bits,
-            bloom_shards=shards,
-            n_shards=self.cfg.bloom_shards,
-        )
+        return dedup_against_seen(df, self._seen_frame())
 
-    def _bloom_commit(self, wave: int, admitted) -> None:
-        """Persist this wave's Bloom increment and fold it into memory.
-        Sharded mode writes the (shard, bits) increments as a table next to
-        the wave snapshot — built and written executor-side, the driver
-        never holds a bitmap (the single-bitmap path's collect+OR is the
-        one driver-side bottleneck at 10^10 seen keys)."""
-        if not (self.cfg.dedup and self.cfg.use_bloom):
+    def _spend_max_req(self, admitted: DataFrame, remaining: dict[int, int]) -> None:
+        """Debit each MaxReq rule's lifetime budget by the rows it admitted
+        (in place). Collects per-rule counts only when a budget exists."""
+        if not remaining:
             return
-        if self.cfg.bloom_sharded:
-            from goribot_spark.operators.bloom import build_bloom_shards
-
-            inc = build_bloom_shards(
-                admitted.select("url_hash"),
-                self.cfg.bloom_shards,
-                self.cfg.bloom_bits // self.cfg.bloom_shards,
-            )
-            self.store.write("bloom_shards", wave, inc)
-            return
-        import numpy as np
-
-        from goribot_spark.operators.bloom import build_bloom
-
-        inc = build_bloom(admitted.select("url_hash"), self.cfg.bloom_bits)
-        self.store.save_bloom(wave, inc)
-        self._bloom = inc if self._bloom is None else np.bitwise_or(self._bloom, inc)
+        for row in (
+            resolve_rule(admitted, self.cfg.rules)
+            .groupBy("rule_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        ):
+            rid = row["rule_id"]
+            if rid in remaining:
+                remaining[rid] = max(0, remaining[rid] - row["n"])
 
     # -- ordering contract (O1/O2, SURVEY §2.6) ---------------------------
 
@@ -464,18 +419,7 @@ class CrawlEngine:
         )
         if self.cfg.dedup:
             self.store.write("seen", wave, df.select("url_hash").coalesce(nf))
-            self._bloom_commit(wave, df)
-        admitted_per_rule = {
-            row["rule_id"]: row["n"]
-            for row in resolve_rule(df, self.cfg.rules)
-            .groupBy("rule_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-            if row["rule_id"] is not None
-        }
-        for rid, used in admitted_per_rule.items():
-            if rid in remaining:
-                remaining[rid] = max(0, remaining[rid] - used)
+        self._spend_max_req(df, remaining)
         state.update(
             {
                 "seq_base": seq_base + n_urls,
@@ -516,12 +460,30 @@ class CrawlEngine:
         latest = self.spark.createDataFrame(
             [(host, k, v) for k, v in cookies.items()], "host string, ck string, cv string"
         )
+        wave = self.store.last_wave() + 1
+        self.store.write("host_state", wave, self._merge_cookies(latest))
+        self.store.commit_wave(
+            wave, {"jar_preseed": len(cookies)}, self.store.manifest["driver_state"]
+        )
+
+    def _merge_cookies(self, latest: DataFrame) -> DataFrame:
+        """The committed jar with ``latest`` (host, ck, cv) merged over it —
+        a new value wins per (host, name) — as one single-file snapshot.
+
+        repartition(1), NOT coalesce(1): coalesce collapses every upstream
+        stage up to the nearest shuffle into one task, so the map-building
+        agg over all hosts-with-cookies would run single-threaded;
+        repartition keeps it parallel and only the one-file write is a
+        single (tiny) task. sortWithinPartitions: repartition(1) is a
+        round-robin shuffle with nondeterministic arrival order; the sort
+        restores the byte-identical single-file snapshot the resume
+        contract claims."""
         prev = (
             self.store.host_state()
             .select("host", F.explode("cookies").alias("ck", "cv"))
             .join(latest.select("host", "ck"), on=["host", "ck"], how="left_anti")
         )
-        merged = (
+        return (
             prev.unionByName(latest)
             .groupBy("host")
             .agg(
@@ -531,11 +493,6 @@ class CrawlEngine:
             )
             .repartition(1)
             .sortWithinPartitions("host")
-        )
-        wave = self.store.last_wave() + 1
-        self.store.write("host_state", wave, merged)
-        self.store.commit_wave(
-            wave, {"jar_preseed": len(cookies)}, self.store.manifest["driver_state"]
         )
 
     # -- one superstep -----------------------------------------------------
@@ -818,23 +775,7 @@ class CrawlEngine:
                 .select(F.col("url").alias("image_id"), F.col("body").alias("bytes"))
                 .localCheckpoint(eager=True)
             )
-            results = (
-                refs.join(img_bytes, "image_id")
-                .transform(with_decoded)
-                .select(
-                    "image_id",
-                    "bytes",
-                    "w",
-                    "h",
-                    "fmt",
-                    "caption",
-                    "phash",
-                    "decode_error",
-                    "src_url",
-                    "handler_id",
-                    F.lit(wave).cast("int").alias("wave"),
-                )
-            )
+            joined = refs.join(img_bytes, "image_id")
         else:
             refs = emit_items.select(
                 F.col("url").alias("src_url"),
@@ -848,25 +789,22 @@ class CrawlEngine:
             # disk, which would otherwise saturate single-node I/O and cap
             # scaling. Decode runs in the join's reduce stage at the cache's
             # partition count.
-            results = (
-                refs.join(
-                    self.images.select("image_id", "bytes", "caption"), "image_id"
-                )
-                .transform(with_decoded)
-                .select(
-                    "image_id",
-                    "bytes",
-                    "w",
-                    "h",
-                    "fmt",
-                    "caption",
-                    "phash",
-                    "decode_error",
-                    "src_url",
-                    "handler_id",
-                    F.lit(wave).cast("int").alias("wave"),
-                )
+            joined = refs.join(
+                self.images.select("image_id", "bytes", "caption"), "image_id"
             )
+        results = joined.transform(with_decoded).select(
+            "image_id",
+            "bytes",
+            "w",
+            "h",
+            "fmt",
+            "caption",
+            "phash",
+            "decode_error",
+            "src_url",
+            "handler_id",
+            F.lit(wave).cast("int").alias("wave"),
+        )
         # OnItem chain + per-handler item stages (goribot.go:332-342): item
         # transforms/filters before the sink write; handler_id rides along
         # for the per-handler split and is dropped at the final select.
@@ -948,30 +886,7 @@ class CrawlEngine:
                 .where(F.col("_rn") == 1)
                 .select("host", "ck", "cv")
             )
-            prev = (
-                self.store.host_state()
-                .select("host", F.explode("cookies").alias("ck", "cv"))
-                .join(latest.select("host", "ck"), on=["host", "ck"], how="left_anti")
-            )
-            # repartition(1), NOT coalesce(1): coalesce collapses every
-            # upstream stage up to the nearest shuffle into one task, so the
-            # map-building agg over all hosts-with-cookies would run single-
-            # threaded; repartition keeps it parallel and only the one-file
-            # write is a single (tiny) task.
-            # sortWithinPartitions: repartition(1) is a round-robin shuffle
-            # with nondeterministic arrival order; the sort restores the
-            # byte-identical single-file snapshot the resume contract claims.
-            host_state_write = (
-                prev.unionByName(latest)
-                .groupBy("host")
-                .agg(
-                    F.map_from_entries(
-                        F.array_sort(F.collect_list(F.struct("ck", "cv")))
-                    ).alias("cookies")
-                )
-                .repartition(1)
-                .sortWithinPartitions("host")
-            )
+            host_state_write = self._merge_cookies(latest)
 
         # Row count captured INSIDE the write action (Observation API): the
         # previous footer-metadata count(*) over the freshly-written files
@@ -1046,23 +961,9 @@ class CrawlEngine:
             for t, fut in futures.items():
                 fut.result()
         mark("writes")
-        if cfg.dedup:
-            self._bloom_commit(wave, admitted)
-        mark("bloom")
         wall = time.time() - t0
 
-        if remaining:  # only collect rule accounting when a MaxReq rule exists
-            admitted_per_rule = {
-                row["rule_id"]: row["n"]
-                for row in resolve_rule(admitted, cfg.rules)
-                .groupBy("rule_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-                if row["rule_id"] is not None
-            }
-            for rid, used in admitted_per_rule.items():
-                if rid in remaining:
-                    remaining[rid] = max(0, remaining[rid] - used)
+        self._spend_max_req(admitted, remaining)
         state.update(
             {
                 "seq_base": seq_base + n_cands,
@@ -1138,10 +1039,6 @@ class CrawlEngine:
         # doesn't re-fetch robots.txt for those hosts.
         if self.cfg.robots and self.cfg.fetch_mode == "live":
             self.robots = self.store.read("robots_live")
-        if self.cfg.dedup and self.cfg.use_bloom and not self.cfg.bloom_sharded:
-            self._bloom = self.store.load_bloom_union()
-        # sharded mode needs no reload: _dedup reads the bloom_shards table
-        # fresh (committed waves only) on every call.
 
     def run(
         self,

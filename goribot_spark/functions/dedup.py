@@ -214,7 +214,7 @@ def shingle_sets(
     )
 
 
-# Kirsch-Mitzenmacher double hashing (same public technique bloom.py cites):
+# Kirsch-Mitzenmacher double hashing:
 # hash_i(x) = h1(x) + i·(h2(x) mod 2^55) — two md5 evaluations per shingle
 # instead of num_hashes (measured ~8x less hashing in the signature stage).
 # h1 < 2^60 and i·(h2 mod 2^55) < 16·2^55 = 2^59 keep the sum well inside

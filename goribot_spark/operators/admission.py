@@ -5,8 +5,8 @@ Candidate links pass, in reference order: rule allow/deny + whitelist + depth
 (extensions.go:131-151), then request-dedup (extensions.go:288-309) as a
 left_anti join against the global ``seen`` table — the scalable replacement
 for the in-memory MD5 set. All rule/robots lookups are broadcast joins
-(config-scale right sides); only the seen anti-join shuffles, on
-``url_hash``, and Spark's runtime bloom-filter join prunes it.
+(config-scale right sides); only the exact seen anti-join shuffles, on
+``url_hash``.
 """
 
 from __future__ import annotations
@@ -153,39 +153,17 @@ def apply_robots(df: DataFrame, robots: DataFrame | None, ua: str) -> DataFrame:
     )
 
 
-def dedup_against_seen(
-    cand: DataFrame,
-    seen: DataFrame,
-    spark=None,
-    bloom=None,
-    bloom_bits: int | None = None,
-    bloom_shards: DataFrame | None = None,
-    n_shards: int | None = None,
-) -> DataFrame:
+def dedup_against_seen(cand: DataFrame, seen: DataFrame, spark=None) -> DataFrame:
     """F6/F7: global seen-set anti-join + intra-wave first-wins self-dedup.
 
     Retry rows never reach this path (re-enqueued directly with retry_count+1
     — the dedup exemption of extensions.go:293-295); hashes of admitted rows
     are appended to ``seen`` by the caller, making the table the shared
-    atomic set that Redis SAdd was (manager.go:182-193).
-
-    With ``bloom`` set (a single bitmap) or ``bloom_shards`` set (the
-    sharded (shard, bits) table — the 10^10 path with no driver-side union
-    or broadcast), the approximate pre-filter prunes definitely-new rows
-    from the anti-join (operators/bloom.py); output is identical either way.
+    atomic set that Redis SAdd was (manager.go:182-193). ``spark`` is
+    accepted for call-site compatibility and unused.
     """
     w = Window.partitionBy("url_hash").orderBy("seq")
     cand = cand.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
-    if bloom_shards is not None:
-        from goribot_spark.operators.bloom import dedup_with_bloom_shards
-
-        return dedup_with_bloom_shards(
-            cand, seen, bloom_shards, n_shards, bloom_bits // n_shards
-        )
-    if bloom is not None:
-        from goribot_spark.operators.bloom import dedup_with_bloom
-
-        return dedup_with_bloom(cand, seen, spark, bloom, bloom_bits)
     return cand.join(seen.select("url_hash"), on="url_hash", how="left_anti")
 
 

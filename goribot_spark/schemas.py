@@ -128,16 +128,6 @@ LIMIT_RULES = StructType(
     ]
 )
 
-# Sharded Bloom filter increments (operators/bloom.py sharded path): one
-# bitmap per pmod(url_hash, n_shards) shard per wave — built partition-
-# locally, probed via cogroup; never driver-unioned or broadcast whole.
-BLOOM_SHARDS = StructType(
-    [
-        StructField("shard", IntegerType(), False),
-        StructField("bits", BinaryType(), False),
-    ]
-)
-
 # robots.txt rules (reference RobotsTxt, extensions.go:131-151).
 ROBOTS_RULES = StructType(
     [

@@ -1,9 +1,9 @@
 """SparkSession factory with scale-oriented defaults.
 
 Tuned for the target posture (SURVEY.md §4): AQE on (runtime coalescing +
-skew-join splitting), Arrow-vectorized Python boundary, runtime Bloom-filter
-join injection for the seen-set anti-join, and a shuffle-partition count that
-matches local core counts while staying sane for a real cluster.
+skew-join splitting), Arrow-vectorized Python boundary, and a
+shuffle-partition count that matches local core counts while staying sane for
+a real cluster.
 """
 
 from __future__ import annotations
@@ -43,7 +43,7 @@ def get_spark(
         "spark.sql.adaptive.skewJoin.enabled": "true",
         # Runtime bloom-filter join injection measured net-negative on the
         # wave supersteps (planning cost > pruning benefit at these join
-        # sizes); the engine has its own persistent Bloom layer instead.
+        # sizes), so the seen anti-join runs as a plain exact join.
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "false",
         # All Python crossings are Arrow-vectorized (input_hint: no per-row UDFs).
         "spark.sql.execution.arrow.pyspark.enabled": "true",

@@ -45,7 +45,6 @@ TABLES = (
     "metrics",
     "host_state",
     "robots_live",
-    "bloom_shards",
 )
 
 _SCHEMAS = {
@@ -55,7 +54,6 @@ _SCHEMAS = {
     "errors": schemas.ERRORS,
     "metrics": schemas.METRICS,
     "robots_live": schemas.ROBOTS_RULES,
-    "bloom_shards": schemas.BLOOM_SHARDS,
 }
 
 
@@ -180,24 +178,6 @@ class CrawlStore:
                     shutil.rmtree(os.path.join(tdir, d))
                 elif d.startswith("base=") and int(d.split("=")[1]) not in tiers:
                     shutil.rmtree(os.path.join(tdir, d))
-        bdir = os.path.join(self.run_dir, "bloom")
-        if os.path.isdir(bdir):
-            bloom_base = self._base_through("bloom")
-            bloom_tiers = {f"base={t}.npy" for t in self._tiers("bloom")}
-            for fn in os.listdir(bdir):
-                stranded_tmp = fn.startswith(".base_tmp")
-                orphan_base = fn.startswith("base=") and fn not in bloom_tiers
-                # a crash between the manifest publish and the bloom
-                # post-commit cleanup strands per-wave increments at/below
-                # the folded horizon — reads already ignore them
-                # (load_bloom_union filters w > horizon); sweep the files
-                stale_wave = (
-                    fn.startswith("wave=")
-                    and int(fn.split("=")[1].split(".")[0]) <= bloom_base
-                )
-                if stranded_tmp or orphan_base or stale_wave:
-                    os.remove(os.path.join(bdir, fn))
-
     # -- IO ----------------------------------------------------------------
 
     def _wave_dir(self, table: str, wave: int) -> str:
@@ -312,37 +292,6 @@ class CrawlStore:
         row counts etc.) — keeps callers off the private layout."""
         return self._wave_dir(table, wave)
 
-    # -- Bloom filter persistence (one .npy increment per wave) -----------
-
-    def bloom_path(self, wave: int) -> str:
-        d = os.path.join(self.run_dir, "bloom")
-        os.makedirs(d, exist_ok=True)
-        return os.path.join(d, f"wave={wave}.npy")
-
-    def save_bloom(self, wave: int, bits) -> None:
-        import numpy as np
-
-        np.save(self.bloom_path(wave), bits)
-
-    def load_bloom_union(self):
-        """OR of the compacted base (if any) and the per-wave Bloom
-        increments above it (None if none)."""
-        import numpy as np
-
-        through = self._base_through("bloom")
-        out = None
-        for t in self._tiers("bloom"):
-            base = os.path.join(self.run_dir, "bloom", f"base={t}.npy")
-            if os.path.exists(base):
-                b = np.load(base)
-                out = b if out is None else np.bitwise_or(out, b)
-        for w in self.committed_waves():
-            p = self.bloom_path(w)
-            if w > through and os.path.exists(p):
-                b = np.load(p)
-                out = b if out is None else np.bitwise_or(out, b)
-        return out
-
     # -- compaction (Iceberg rewrite_data_files / snapshot-expiry analog) ---
 
     def _read_wave_range(self, table: str, lo: int, hi: int) -> DataFrame | None:
@@ -384,10 +333,7 @@ class CrawlStore:
         consumed history (the positional-delete compaction + snapshot
         expiry analog): ``pending_frontier()`` and all forward semantics
         are unchanged, but ``fetch_log()`` no longer covers waves at or
-        below the horizon. Either way ``bloom_shards`` rows OR-merge to one
-        row per shard per tier and the single-bitmap ``bloom`` increments
-        OR-merge to one array per tier — the probe unions increments
-        anyway, so merged state is semantically identical.
+        below the horizon.
 
         ``files_per_table`` caps output files per fold (coalesce) — sized
         for the sandbox; a cluster compaction would target Iceberg's file
@@ -405,9 +351,6 @@ class CrawlStore:
         sees the bases — test_compact_files_lossless's fresh-store
         assertions, test_compact_peer_commit_survives).
         """
-        import numpy as np
-        import pandas as pd
-
         if mode not in ("files", "state"):
             raise ValueError(f"unknown compaction mode {mode!r}")
         # fold in peer-committed waves FIRST so `through` covers them and
@@ -417,18 +360,9 @@ class CrawlStore:
         if through < 0:
             return {}
         bases = dict(self.manifest.get("bases", {}))
-        tiers = {t: list(self._tiers(t)) for t in list(TABLES) + ["bloom"]}
+        tiers = {t: list(self._tiers(t)) for t in TABLES}
         done: dict[str, int] = {}
         renames: list[tuple[str, str]] = []
-
-        def _or_merge(pdf: pd.DataFrame) -> pd.DataFrame:
-            bits = None
-            for b in pdf["bits"]:
-                a = np.frombuffer(b, dtype=np.uint8)
-                bits = a.copy() if bits is None else np.bitwise_or(bits, a)
-            return pd.DataFrame(
-                {"shard": [int(pdf["shard"].iloc[0])], "bits": [bits.tobytes()]}
-            )
 
         for t in TABLES:
             horizon = int(bases.get(t, -1))
@@ -454,15 +388,6 @@ class CrawlStore:
                 df = self.pending_frontier()
             elif t == "seen" and mode == "state":
                 df = self.read(t).distinct()
-            elif t == "bloom_shards":
-                shards = (
-                    self.read(t) if full else self._read_wave_range(t, horizon, through)
-                )
-                df = None
-                if shards is not None:
-                    df = shards.groupBy("shard").applyInPandas(
-                        _or_merge, "shard int, bits binary"
-                    )
             else:
                 df = self.read(t) if full else self._read_wave_range(t, horizon, through)
             if df is None and mode == "files":
@@ -478,36 +403,11 @@ class CrawlStore:
                 tiers[t] = [through]
             bases[t] = through
             done[t] = through
-        # single-bitmap bloom increments (outside TABLES — .npy lifecycle)
-        bloom_horizon = int(bases.get("bloom", -1))
-        if bloom_horizon != through:
-            bloom_full = mode == "state" or len(tiers["bloom"]) + 1 > max_tiers
-            if bloom_full:
-                bloom_union = self.load_bloom_union()
-            else:
-                bloom_union = None
-                for w in self.committed_waves():
-                    p = self.bloom_path(w)
-                    if bloom_horizon < w <= through and os.path.exists(p):
-                        b = np.load(p)
-                        bloom_union = (
-                            b if bloom_union is None else np.bitwise_or(bloom_union, b)
-                        )
-            if bloom_union is not None:
-                bdir = os.path.join(self.run_dir, "bloom")
-                tmp_npy = os.path.join(bdir, f".base_tmp{through}.npy")
-                np.save(tmp_npy, bloom_union)
-                renames.append((tmp_npy, os.path.join(bdir, f"base={through}.npy")))
-                tiers["bloom"] = (
-                    [through] if bloom_full else tiers["bloom"] + [through]
-                )
-                bases["bloom"] = through
-                done["bloom"] = through
         if not done:
             return {}
         for tmp, final in renames:
             if os.path.exists(final):  # re-compaction at the same horizon
-                shutil.rmtree(final) if os.path.isdir(final) else os.remove(final)
+                shutil.rmtree(final)
             os.rename(tmp, final)
         # the commit point: until this rename lands, every new path above is
         # unpublished garbage that rollback_uncommitted would sweep
@@ -516,22 +416,10 @@ class CrawlStore:
             t: ts for t, ts in tiers.items() if ts
         }
         self._publish_manifest()
-        # post-commit cleanup — crash-safe: read()/host_state()/
-        # load_bloom_union ignore anything at or below the horizon, and the
-        # next rollback_uncommitted sweeps whatever this loop doesn't reach
+        # post-commit cleanup — crash-safe: read()/host_state() ignore
+        # anything at or below the horizon, and the next
+        # rollback_uncommitted sweeps whatever this loop doesn't reach
         for t in done:
-            if t == "bloom":
-                bdir = os.path.join(self.run_dir, "bloom")
-                keep = {f"base={w}.npy" for w in tiers["bloom"]}
-                for fn in os.listdir(bdir):
-                    stale_wave = (
-                        fn.startswith("wave=")
-                        and int(fn.split("=")[1].split(".")[0]) <= through
-                    )
-                    stale_base = fn.startswith("base=") and fn not in keep
-                    if stale_wave or stale_base:
-                        os.remove(os.path.join(bdir, fn))
-                continue
             tdir = os.path.join(self.run_dir, t)
             keep = {f"base={w}" for w in tiers[t]}
             for d in os.listdir(tdir):

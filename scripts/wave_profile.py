@@ -1,7 +1,8 @@
 """Per-wave driver-floor profile: run the default bench crawl and print each
 wave's phase timings from the manifest (select_wave / fetch_parse_rank /
-materialize / writes / bloom) plus the unattributed residual — the feedback
-loop for attacking the per-wave driver floor. Usage:
+materialize / plan_writes / write_results / metrics_write / writes) plus the
+unattributed residual — the feedback loop for attacking the per-wave driver
+floor. Usage:
     SPARK_GRAFT_BENCH_DEPTH=3 python scripts/wave_profile.py
 """
 

@@ -1,128 +1,9 @@
-"""Unit tests: Bloom pre-filter equivalence, distributed global rank,
-streaming monitor."""
+"""Unit tests: distributed global rank, distributed seeding, streaming
+monitor."""
 
-import numpy as np
 from pyspark.sql import functions as F
 
-from goribot_spark.operators.bloom import (
-    build_bloom,
-    build_bloom_shards,
-    dedup_with_bloom,
-    dedup_with_bloom_shards,
-    maybe_seen_udf,
-    union_blooms,
-)
 from goribot_spark.operators.ordering import with_global_rank
-
-
-def test_bloom_no_false_negatives_and_prunes(spark):
-    seen_hashes = [(int(h),) for h in np.random.default_rng(1).integers(-(2**62), 2**62, 5000)]
-    seen = spark.createDataFrame(seen_hashes, "url_hash long")
-    bloom = build_bloom(seen, num_bits=1 << 20)
-    udf = maybe_seen_udf(spark, bloom, num_bits=1 << 20)
-    # Every seen hash must test positive (no false negatives).
-    fn = seen.withColumn("m", udf(F.col("url_hash"))).where(~F.col("m")).count()
-    assert fn == 0
-    # Unseen hashes mostly test negative (fpr well under 5% at this sizing).
-    unseen = spark.createDataFrame(
-        [(int(h),) for h in np.random.default_rng(2).integers(-(2**62), 2**62, 2000)],
-        "url_hash long",
-    )
-    fp = unseen.withColumn("m", udf(F.col("url_hash"))).where(F.col("m")).count()
-    assert fp < 100
-
-
-def test_bloom_dedup_equals_exact(spark):
-    rng = np.random.default_rng(3)
-    seen_vals = [int(h) for h in rng.integers(0, 10_000, 3000)]
-    cand_vals = [int(h) for h in rng.integers(0, 12_000, 2000)]
-    seen = spark.createDataFrame([(v,) for v in set(seen_vals)], "url_hash long")
-    cand = spark.createDataFrame(
-        [(v, i) for i, v in enumerate(cand_vals)], "url_hash long, seq long"
-    ).dropDuplicates(["url_hash"])
-    exact = {
-        r["url_hash"]
-        for r in cand.join(seen, "url_hash", "left_anti").collect()
-    }
-    bloom = build_bloom(seen, num_bits=1 << 20)
-    got = {
-        r["url_hash"]
-        for r in dedup_with_bloom(cand, seen, spark, bloom, num_bits=1 << 20).collect()
-    }
-    assert got == exact
-
-
-def test_bloom_union():
-    a = np.zeros(16, dtype=np.uint8)
-    b = np.zeros(16, dtype=np.uint8)
-    a[0], b[5] = 3, 7
-    u = union_blooms([a, b])
-    assert u[0] == 3 and u[5] == 7
-
-
-def test_bloom_sharded_dedup_equals_exact(spark):
-    """The sharded path (partition-local build → (shard, bits) table →
-    cogrouped probe; no driver collect/OR, no broadcast) must return exactly
-    the rows a plain left_anti would — including negative hashes, whose
-    pmod shard key must agree between build (JVM) and probe (JVM)."""
-    rng = np.random.default_rng(7)
-    seen_vals = [int(h) for h in rng.integers(-(2**62), 2**62, 3000)]
-    cand_vals = list(
-        rng.choice(np.array(seen_vals, dtype=np.int64), 800)
-    ) + [int(h) for h in rng.integers(-(2**62), 2**62, 1200)]
-    seen = spark.createDataFrame([(int(v),) for v in set(seen_vals)], "url_hash long")
-    cand = spark.createDataFrame(
-        [(int(v), i) for i, v in enumerate(cand_vals)], "url_hash long, seq long"
-    ).dropDuplicates(["url_hash"])
-    shards = build_bloom_shards(seen, n_shards=8, shard_bits=1 << 17)
-    got = {
-        (r["url_hash"], r["seq"])
-        for r in dedup_with_bloom_shards(
-            cand, seen, shards, n_shards=8, shard_bits=1 << 17
-        ).collect()
-    }
-    exact = {
-        (r["url_hash"], r["seq"])
-        for r in cand.join(seen, on="url_hash", how="left_anti").collect()
-    }
-    assert got == exact
-    # increments across "waves" OR inside the probe: splitting seen into two
-    # shard tables and unioning them must give the same answer
-    s1, s2 = seen.randomSplit([0.5, 0.5], seed=11)
-    inc = build_bloom_shards(s1, 8, 1 << 17).unionByName(
-        build_bloom_shards(s2, 8, 1 << 17)
-    )
-    got2 = {
-        (r["url_hash"], r["seq"])
-        for r in dedup_with_bloom_shards(
-            cand, seen, inc, n_shards=8, shard_bits=1 << 17
-        ).collect()
-    }
-    assert got2 == exact
-
-
-def test_crawl_with_sharded_bloom_identical(spark, fx, tmp_path):
-    """bloom_sharded=True must not change any crawl decision, and the
-    per-wave (shard, bits) increments must land in the bloom_shards table
-    (resumable, no .npy driver artifacts)."""
-    import os
-
-    from tests.conftest import crawl, engine_attempt_counts, engine_fetched_set
-
-    base = crawl(spark, fx, tmp_path / "a", ["http://site1.test/p/0"], max_depth=2, max_waves=8)
-    with_b = crawl(
-        spark, fx, tmp_path / "b", ["http://site1.test/p/0"],
-        max_depth=2, max_waves=8, use_bloom=True, bloom_sharded=True, bloom_shards=8,
-    )
-    assert engine_fetched_set(with_b) == engine_fetched_set(base)
-    assert engine_attempt_counts(with_b) == engine_attempt_counts(base)
-    assert os.path.isdir(os.path.join(str(tmp_path / "b"), "bloom_shards", "wave=0"))
-    assert not os.path.exists(os.path.join(str(tmp_path / "b"), "bloom", "wave=0.npy"))
-    # the persisted shard table is well-formed: shard ids in range, bitmap
-    # bytes sized shard_bits/8
-    rows = with_b.store.read("bloom_shards").collect()
-    assert rows and all(0 <= r["shard"] < 8 for r in rows)
-    assert all(len(r["bits"]) == (1 << 23) // 8 // 8 for r in rows)
 
 
 def test_global_rank_deterministic_and_total(spark):
@@ -147,23 +28,6 @@ def test_global_rank_deterministic_and_total(spark):
     assert total3 == 500
     got3 = {r["id"]: r["rk"] for r in r3.collect()}
     assert got3 == got
-
-
-def test_crawl_with_bloom_identical(spark, fx, tmp_path):
-    """use_bloom=True must not change any crawl decision — pure shuffle
-    pruning (and it must survive resume via the persisted increments)."""
-    from tests.conftest import crawl, engine_attempt_counts, engine_fetched_set
-
-    base = crawl(spark, fx, tmp_path / "a", ["http://site1.test/p/0"], max_depth=2, max_waves=8)
-    with_b = crawl(
-        spark, fx, tmp_path / "b", ["http://site1.test/p/0"],
-        max_depth=2, max_waves=8, use_bloom=True,
-    )
-    assert engine_fetched_set(with_b) == engine_fetched_set(base)
-    assert engine_attempt_counts(with_b) == engine_attempt_counts(base)
-    import os
-
-    assert os.path.exists(os.path.join(str(tmp_path / "b"), "bloom", "wave=0.npy"))
 
 
 def test_streaming_monitor(spark, fx, tmp_path):

@@ -14,8 +14,6 @@ of the procedure. Covered here:
     crawl interrupted mid-run, compacted, and resumed by a FRESH session
     produces exactly the results of an uninterrupted control crawl;
   * the cookie jar (host_state latest-snapshot semantics) survives;
-  * sharded Bloom increments OR-merge to one row per shard and the crawl
-    still dedups byte-identically to the exact path;
   * crash safety — stranded temp/base dirs from a died compaction are
     swept on the next open and never become visible.
 """
@@ -62,8 +60,6 @@ def test_compact_files_lossless(spark, fx, tmp_path):
     assert done  # at least frontier/consumed/seen/results compacted
     # every compacted table folded to a single base dir, wave dirs gone
     for t, through in done.items():
-        if t == "bloom":
-            continue
         assert _wave_dirs(tmp_path / "run", t) == []
         assert os.path.isdir(os.path.join(str(tmp_path / "run"), t, f"base={through}"))
     # a brand-new store (fresh manifest read, rollback sweep) sees identical state
@@ -122,30 +118,6 @@ def test_compact_preserves_cookie_jar(spark, fx, tmp_path):
     s2 = CrawlStore(spark, str(rd))
     assert s2.has_host_state()
     assert _sorted_rows(s2.host_state()) == jar_before
-
-
-def test_compact_bloom_shards_merge(spark, fx, tmp_path):
-    """Sharded Bloom increments merge to ≤1 row per shard; dedup stays
-    byte-identical to the exact anti-join (fetched-set parity vs a
-    no-bloom control) when the crawl CONTINUES after compaction."""
-    rd = tmp_path / "run"
-    cfg = CrawlConfig(
-        retry_max=2, max_waves=16, use_bloom=True, bloom_sharded=True, bloom_shards=8
-    )
-    eng = CrawlEngine(spark, fx, str(rd), cfg)
-    eng.seed(SEEDS)
-    eng.run(max_waves=2)
-    log_before = _sorted_rows(eng.store.fetch_log(), ["url", "retry_count"])
-    eng.compact(mode="state")
-    shards = eng.store.read("bloom_shards").collect()
-    assert len(shards) == len({r["shard"] for r in shards})  # one row per shard
-    eng.run()  # finish on the compacted store
-    log_after = _sorted_rows(eng.store.fetch_log(), ["url", "retry_count"])
-    ctrl = crawl(spark, fx, tmp_path / "ctrl", SEEDS, retry_max=2, max_waves=16)
-    log_ctrl = _sorted_rows(ctrl.store.fetch_log(), ["url", "retry_count"])
-    # byte-identical dedup across the compacted Bloom: the pre+post logs
-    # concatenate into exactly the no-bloom control's attempt multiset
-    assert sorted(log_before + log_after) == log_ctrl
 
 
 def test_compact_crash_leftovers_swept(spark, fx, tmp_path):
@@ -320,29 +292,3 @@ def test_compact_incremental_tiers_then_full_merge(spark, fx, tmp_path):
     ]
     log_final = _sorted_rows(eng.store.fetch_log(), ["url", "retry_count"])
     assert [r for r in log_final if r in log_now] == log_now
-
-
-def test_rollback_sweeps_stale_bloom_increments(spark, fx, tmp_path):
-    """A crash between the manifest publish and the bloom post-commit
-    cleanup strands per-wave .npy increments at/below the folded horizon;
-    rollback_uncommitted sweeps them (reads already ignored them)."""
-    import numpy as np
-
-    rd = tmp_path / "run"
-    cfg = CrawlConfig(
-        retry_max=2, max_waves=16, use_bloom=True, bloom_sharded=False
-    )
-    eng = CrawlEngine(spark, fx, str(rd), cfg)
-    eng.seed(SEEDS)
-    eng.run(max_waves=3)
-    eng.compact(mode="files")
-    horizon = eng.store._base_through("bloom")
-    assert horizon >= 0
-    union_before = eng.store.load_bloom_union()
-    # simulate the crash: a stale pre-horizon increment reappears
-    stale = os.path.join(str(rd), "bloom", "wave=0.npy")
-    np.save(stale, np.zeros_like(union_before))
-    s2 = CrawlStore(spark, str(rd))
-    s2.rollback_uncommitted()
-    assert not os.path.exists(stale)
-    assert (s2.load_bloom_union() == union_before).all()

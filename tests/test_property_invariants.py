@@ -13,12 +13,9 @@ properties that parity depends on, over generated inputs:
     header-value list order (the reference sorts both, tools.go:56-66);
   * request_hash(url, meta) degrades to url_hash(url) exactly when meta
     carries no request-shaping keys (h:/c:/body) — URL-only crawls must pay
-    nothing and must collide with their seed-list twins;
-  * the Bloom index math has no false negatives (an inserted key always
-    probes maybe-seen), for any int64 keys incl. negatives, at both the
-    single-bitmap and per-shard bit widths.
+    nothing and must collide with their seed-list twins.
 
-All properties are pure Python/numpy — no SparkSession — so the module runs
+All properties are pure Python — no SparkSession — so the module runs
 in milliseconds per example and hypothesis can afford its default budget.
 """
 
@@ -27,7 +24,6 @@ from __future__ import annotations
 import random
 import string
 
-import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -39,7 +35,6 @@ from goribot_spark.canon import (
     url_hash,
     xxh64,
 )
-from goribot_spark.operators.bloom import NUM_HASHES, _indexes
 
 # -- URL component strategies ------------------------------------------------
 # Hosts/paths stay URL-shaped (the canonicalizer is not a parser fuzzer);
@@ -177,75 +172,3 @@ def test_xxh64_matches_reference_vectors_shape(data):
     assert h1 == h2
     assert -(1 << 63) <= h1 < (1 << 63)
 
-
-# -- Bloom: no false negatives ------------------------------------------------
-
-
-def _insert(keys: np.ndarray, num_bits: int) -> np.ndarray:
-    bits = np.zeros(num_bits // 8, dtype=np.uint8)
-    for idx in _indexes(keys, num_bits):
-        np.bitwise_or.at(bits, idx >> 3, (1 << (idx & 7)).astype(np.uint8))
-    return bits
-
-
-def _probe(bits: np.ndarray, keys: np.ndarray, num_bits: int) -> np.ndarray:
-    hit = np.ones(len(keys), dtype=bool)
-    for idx in _indexes(keys, num_bits):
-        hit &= (bits[idx >> 3] & (1 << (idx & 7)).astype(np.uint8)) != 0
-    return hit
-
-
-@settings(deadline=None)
-@given(
-    st.lists(
-        st.integers(min_value=-(1 << 63), max_value=(1 << 63) - 1),
-        min_size=1,
-        max_size=200,
-    ),
-    st.sampled_from([1 << 13, 1 << 17, 1 << 20]),  # shard-width through bitmap-width
-)
-def test_bloom_no_false_negatives(keys, num_bits):
-    """Every inserted key probes maybe-seen at every configured bit width —
-    the property that makes the Bloom layer a pure pruning step (false
-    positives fall through to the exact anti-join; a false negative would
-    re-crawl a seen URL, violating F6/F7)."""
-    arr = np.array(keys, dtype=np.int64)
-    bits = _insert(arr, num_bits)
-    assert _probe(bits, arr, num_bits).all()
-
-
-@settings(deadline=None)
-@given(
-    st.lists(
-        st.integers(min_value=-(1 << 63), max_value=(1 << 63) - 1),
-        min_size=1,
-        max_size=100,
-    )
-)
-def test_bloom_union_equals_rebuild(keys):
-    """OR of per-half bitmaps == bitmap of the union (the closure-under-union
-    property the partition-local build and the per-wave increment lifecycle
-    both rely on — bloom.py build_bloom / load_bloom_union)."""
-    arr = np.array(keys, dtype=np.int64)
-    half = len(arr) // 2
-    num_bits = 1 << 13
-    a, b = _insert(arr[:half], num_bits), _insert(arr[half:], num_bits)
-    assert np.array_equal(np.bitwise_or(a, b), _insert(arr, num_bits))
-
-
-@settings(deadline=None)
-@given(st.integers(min_value=-(1 << 63), max_value=(1 << 63) - 1))
-def test_shard_routing_matches_jvm_pmod(key):
-    """Python's % on negatives equals Spark's F.pmod (both non-negative) —
-    the build side (JVM pmod in build_bloom_shards) and any Python-side
-    helper must route a key to the same shard or probes silently miss."""
-    n = 16
-    assert key % n == ((key % n) + n) % n  # Python % is already non-negative
-    assert 0 <= key % n < n
-
-
-def test_indexes_count():
-    """k index arrays per key (the k of the fpr budget in SCALE.md §4)."""
-    out = _indexes(np.array([1, -1, 0], dtype=np.int64), 1 << 13)
-    assert len(out) == NUM_HASHES
-    assert all(len(a) == 3 for a in out)
