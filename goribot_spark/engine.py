@@ -24,7 +24,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from goribot_spark import schemas
@@ -194,12 +194,15 @@ class CrawlEngine:
         else:
             self.robots = None
         # Incremental crawl-state caches: pending frontier and seen set as
-        # lazily-localCheckpoint'ed frames updated with each wave's deltas.
-        # Rebuilding them from the store each wave re-lists and re-reads
-        # every wave directory AND replans an anti-join over ALL consumed
-        # rows — O(waves) per-wave driver cost that the incremental form
-        # makes O(1). The tables stay the durable truth: a fresh engine
-        # (resume) or a mid-crawl seed() rebuilds the caches from them.
+        # localCheckpoint(eager=False)'ed frames updated with each wave's
+        # deltas. Under AQE that is only half lazy: the call itself runs
+        # every shuffle-map stage of the plan, and the final stage runs at
+        # the first action. Rebuilding them from the store each wave
+        # re-lists and re-reads every wave directory AND replans an
+        # anti-join over ALL consumed rows — O(waves) per-wave driver cost
+        # that the incremental form makes O(1). The tables stay the durable
+        # truth: a fresh engine (resume) or a mid-crawl seed() rebuilds the
+        # caches from them.
         self._pending: DataFrame | None = None
         self._seen: DataFrame | None = None
 
@@ -344,14 +347,14 @@ class CrawlEngine:
         ``frame`` (host, url) not yet in the accumulated robots_live table
         (reference RobotsTxt extension fetches per-host robots lazily,
         extensions.go:131-151). One mapInPandas fetch over the handful of
-        first-seen hosts per wave. Durable outcomes (parsed rules; 4xx
-        allow-all) are APPENDED under this wave's snapshot — up to three
-        increments land per wave (seed hosts, candidate hosts, image hosts),
-        so overwrite would clobber earlier increments from the resumable
-        store. 5xx/transport outcomes are transient disallow-all rows (RFC
-        9309 "unreachable"): applied in-memory for the rest of this wave,
-        never persisted, and evicted at the next wave so the host's robots
-        is re-fetched."""
+        first-seen hosts per call: once per wave over the candidate and
+        image hosts together, and once at seeding (which commits its own
+        wave). Durable outcomes (parsed rules; 4xx allow-all) are APPENDED
+        under the wave's snapshot — at most one increment per wave.
+        5xx/transport outcomes are transient disallow-all rows (RFC 9309
+        "unreachable"): applied in-memory for the rest of this wave, never
+        persisted, and evicted at the next wave so the host's robots is
+        re-fetched."""
         from goribot_spark.operators.fetch import live_fetch_robots
 
         if "_transient_wave" in self.robots.columns:
@@ -363,8 +366,11 @@ class CrawlEngine:
             frame.select("host", "url")
             .groupBy("host")
             .agg(F.min("url").alias("url"))
-            .join(self.robots.select("host").distinct(), "host", "left_anti")
+            .join(self.robots.select("host"), "host", "left_anti")
         )
+        # Both branch decisions below read row counts observed inside the
+        # checkpoint job itself — no probe job after it.
+        counts = Observation()
         rules = (
             live_fetch_robots(
                 need, self.cfg.fetch_timeout_sec, self.cfg.fetch_threads, self.cfg.ua
@@ -376,13 +382,19 @@ class CrawlEngine:
                 (F.col("allow") == "1").alias("allow"),
                 (F.col("transient") == "1").alias("_t"),
             )
+            .observe(
+                counts,
+                F.count(F.lit(1)).alias("all"),
+                F.count(F.when(~F.col("_t"), 1)).alias("durable"),
+            )
             # eager: the fetch is side-effecting — run it exactly once
             .localCheckpoint(eager=True)
         )
-        if rules.isEmpty():
+        n = counts.get
+        if n["all"] == 0:
             return
         durable = rules.where(~F.col("_t")).drop("_t")
-        if not durable.isEmpty():
+        if n["durable"]:
             self.store.append("robots_live", wave, durable.coalesce(1))
         transient = (
             rules.where(F.col("_t"))
@@ -508,6 +520,7 @@ class CrawlEngine:
             _last[0] = now
 
         cfg = self.cfg
+        live = cfg.fetch_mode == "live"
         state = self.store.manifest["driver_state"]
         wave = self.store.last_wave() + 1
         order_cols = self._order_cols()
@@ -556,10 +569,14 @@ class CrawlEngine:
         # drain tail. Cluster note: local checkpoints don't survive executor
         # loss; a real deployment reliability-checkpoints via the per-wave
         # table writes (which ARE the recovery points, store.commit_wave).
-        wave_df = salt_and_partition(
-            wave_df, sp, cfg.hot_host_threshold, cfg.num_salts
-        ).localCheckpoint(eager=True)
-        scheduled = wave_df.count()
+        # The row count is observed inside the checkpoint job.
+        wave_obs = Observation()
+        wave_df = (
+            salt_and_partition(wave_df, sp, cfg.hot_host_threshold, cfg.num_salts)
+            .observe(wave_obs, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        scheduled = wave_obs.get["n"]
         mark("select_wave")
         if scheduled == 0:
             self._pending = pending_base  # nothing consumed; keep the cache
@@ -571,9 +588,7 @@ class CrawlEngine:
         # host; the state side is hosts-with-cookies only, so Spark's
         # auto-broadcast covers it at sandbox scale and AQE picks the
         # strategy at cluster scale.
-        use_jar = cfg.cookie_jar and (
-            cfg.fetch_mode == "live" or "set_cookies" in self.pages.columns
-        )
+        use_jar = cfg.cookie_jar and (live or "set_cookies" in self.pages.columns)
         fetch_base = wave_df
         if use_jar and self.store.has_host_state():
             # Explicit broadcast: the jar is per-host state (hosts-with-
@@ -600,7 +615,7 @@ class CrawlEngine:
         # re-enters a later wave).
         fetch_src = H.apply_hook_stages(fetch_base, cfg.on_req)
 
-        if cfg.fetch_mode == "live":
+        if live:
             # Live HTTP fetch (S4): mapInPandas over the host-salted wave —
             # real sockets in the executors, proxy/UA/header/cookie columns
             # honored, Set-Cookie captured (operators/fetch.py).
@@ -635,8 +650,11 @@ class CrawlEngine:
             )
         ok = F.col("status").isin(list(cfg.okcodes))
         # Slim checkpointed status frame: retry/error/metrics paths reuse it
-        # without re-running the fetch join (bodies stay out of the cache);
-        # lazy checkpoints materialize below in the parallel count jobs.
+        # without re-running the fetch join (bodies stay out of the cache).
+        # eager=False is only half lazy under AQE: the call runs the plan's
+        # shuffle-map stages (the synthetic leg's fetch join; the live leg
+        # has none), and the final stage runs in the materialize aggregates
+        # below.
         fetch_status = fetched.select(
             *schemas.FRONTIER.fieldNames(), "status"
         ).localCheckpoint(eager=False)
@@ -649,9 +667,11 @@ class CrawlEngine:
         ).localCheckpoint(eager=False)
 
         # R1/R2 retry routing + terminal errors.
-        failed = fetch_status.where(~ok | F.col("status").isNull())
+        is_failed = ~ok | F.col("status").isNull()
+        is_terminal = is_failed & (F.col("retry_count") >= F.lit(cfg.retry_max))
+        failed = fetch_status.where(is_failed)
         retryable = failed.where(F.col("retry_count") < F.lit(cfg.retry_max))
-        terminal = failed.where(F.col("retry_count") >= F.lit(cfg.retry_max))
+        terminal = fetch_status.where(is_terminal)
         seq_base = int(state.get("seq_base", 0))
         retry_rows = retryable.select(
             "url",
@@ -703,6 +723,39 @@ class CrawlEngine:
             small_wave=scheduled <= cfg.small_wave_threshold,
         )
         mark("fetch_parse_rank")
+        # Items: image refs → payload (I1-I2). On the live leg the refs
+        # resolve against the page URL once, here: the checkpoint feeds the
+        # robots lookup below, the image fetch and the results join, so
+        # resolve_url_udf crosses into Python once per ref row.
+        emit_items = parsed.where(
+            F.col("parse_error").isNull()
+            & F.col("handler_id").isin(H.item_emitting_ids())
+        )
+        if live:
+            from goribot_spark.operators.discover import host_of, resolve_url_udf
+
+            refs = (
+                emit_items.select(
+                    # relative image refs resolve against the post-redirect
+                    # URL, same base as link discovery (goribot.go:163-166)
+                    F.coalesce(F.col("final_url"), F.col("url")).alias("src_url"),
+                    "handler_id",
+                    F.explode(
+                        F.arrays_zip(
+                            F.col("image_refs").alias("ref"),
+                            F.col("image_alts").alias("alt"),
+                        )
+                    ).alias("ri"),
+                )
+                .select(
+                    "src_url",
+                    "handler_id",
+                    resolve_url_udf(F.col("src_url"), F.col("ri.ref")).alias("image_id"),
+                    F.col("ri.alt").alias("caption"),
+                )
+                .localCheckpoint(eager=False)
+            )
+
         # Custom OnAdd hooks (goribot.go:285-296) run before the built-in
         # admission chain — in the reference, rules/robots/dedup are
         # themselves OnAdd hooks appended by Use(), so user hooks registered
@@ -710,72 +763,87 @@ class CrawlEngine:
         cands = H.apply_hook_stages(cands, cfg.on_add)
         cands = apply_rule_filters(cands, cfg.rules, cfg.whitelist, cfg.max_depth)
         if self.robots is not None:
-            if cfg.fetch_mode == "live":
-                self._ensure_live_robots(cands, wave)
+            if live:
+                # One lookup per wave: image payloads are HTTP requests like
+                # any other, and images often live on other hosts than the
+                # page, so their hosts' robots.txt is fetched here too.
+                img_hosts = refs.select(
+                    host_of(F.col("image_id")).alias("host"),
+                    F.col("image_id").alias("url"),
+                )
+                self._ensure_live_robots(
+                    cands.select("host", "url").unionByName(img_hosts), wave
+                )
             cands = apply_robots(cands, self.robots, cfg.ua)
         if cfg.dedup:
             cands = self._dedup(cands)
         remaining = {int(k): v for k, v in state.get("max_req_remaining", {}).items()}
         cands = apply_max_req(cands, remaining, ["priority", "discovery_epoch", "seq"])
-        admitted = cands.localCheckpoint(eager=False)
 
-        # Items: image refs → payload join → engine-side decode (I1-I2).
-        emit_items = parsed.where(
-            F.col("parse_error").isNull()
-            & F.col("handler_id").isin(H.item_emitting_ids())
-        )
-        if cfg.fetch_mode == "live":
-            # Live payload fetch: img refs resolve against the page URL,
-            # distinct URLs fetch once over HTTP (mapInPandas — bytes are
-            # produced executor-side, never joined from a table), captions
-            # come from the img alt text captured by the parser.
-            from goribot_spark.operators.discover import resolve_url_udf
+        if live:
+            # Live payload fetch: distinct image URLs fetch once over HTTP
+            # (mapInPandas — bytes are produced executor-side, never joined
+            # from a table), captions come from the img alt text captured by
+            # the parser. A host that disallows a path must not be fetched
+            # for its images either.
             from goribot_spark.operators.fetch import live_fetch
 
-            refs = emit_items.select(
-                # relative image refs resolve against the post-redirect URL,
-                # same base as link discovery (goribot.go:163-166)
-                F.coalesce(F.col("final_url"), F.col("url")).alias("src_url"),
-                "handler_id",
-                F.explode(
-                    F.arrays_zip(
-                        F.col("image_refs").alias("ref"),
-                        F.col("image_alts").alias("alt"),
-                    )
-                ).alias("ri"),
-            ).select(
-                "src_url",
-                "handler_id",
-                resolve_url_udf(F.col("src_url"), F.col("ri.ref")).alias("image_id"),
-                F.col("ri.alt").alias("caption"),
-            )
             img_urls = refs.select(F.col("image_id").alias("url")).distinct()
             if self.robots is not None:
-                # Image payloads are HTTP requests like any other: a host
-                # that disallows a path must not be fetched for its images
-                # either (images often live on other hosts than the page —
-                # their robots.txt is fetched+cached here the same lazy way).
-                from goribot_spark.operators.discover import host_of
+                img_urls = apply_robots(
+                    img_urls.withColumn("host", host_of(F.col("url"))),
+                    self.robots,
+                    cfg.ua,
+                ).drop("host")
+            img_fetch = live_fetch(
+                img_urls, cfg.fetch_timeout_sec, cfg.fetch_threads, cfg.ua
+            ).select(F.col("url").alias("image_id"), F.col("body").alias("bytes"))
 
-                img_urls = img_urls.withColumn("host", host_of(F.col("url")))
-                self._ensure_live_robots(img_urls, wave)
-                img_urls = apply_robots(img_urls, self.robots, cfg.ua).drop("host")
+        # Materialize the wave's frames first, at full stage parallelism,
+        # THEN write from cache with a small file count: compute parallelism
+        # and output file count are decoupled, so higher core counts never
+        # multiply the small files that every later wave's frontier/seen
+        # reads re-list. (Iceberg would get the same effect from write
+        # targets + compaction.) The admitted checkpoint, the live image
+        # fetch and the two probe aggregates are independent jobs, so they
+        # run side by side instead of one after another on the wave's serial
+        # chain. Each also yields the counts the writes below branch on:
+        # admitted_n is observed inside the admitted checkpoint job, and
+        # most waves set no cookies and have no errors, so they skip the jar
+        # merge and the errors write entirely.
+        admitted_obs = Observation()
+        parsed_probes = [
+            F.count(F.when(F.col("parse_error").isNotNull(), 1)).alias("errors")
+        ]
+        if use_jar:
+            parsed_probes.append(
+                F.count(F.when(F.col("set_cookies").isNotNull(), 1)).alias("cookies")
+            )
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            f_adm = pool.submit(
+                cands.observe(admitted_obs, F.count(F.lit(1)).alias("n")).localCheckpoint,
+                eager=True,
+            )
             # Eager checkpoint: same exactly-once pin as the page-wave fetch
             # above — the image GETs are side-effecting, and relying on
             # `results` being consumed by a single write action would let
             # any future second action (metrics, an on_item hook) silently
             # re-issue every image request.
-            img_bytes = (
-                live_fetch(
-                    img_urls,
-                    cfg.fetch_timeout_sec,
-                    cfg.fetch_threads,
-                    cfg.ua,
-                )
-                .select(F.col("url").alias("image_id"), F.col("body").alias("bytes"))
-                .localCheckpoint(eager=True)
+            f_img = pool.submit(img_fetch.localCheckpoint, eager=True) if live else None
+            f_fs = pool.submit(
+                lambda: fetch_status.agg(F.count(F.when(is_terminal, 1))).first()[0]
             )
-            joined = refs.join(img_bytes, "image_id")
+            f_pa = pool.submit(lambda: parsed.agg(*parsed_probes).first())
+            admitted, terminal_n, parsed_n = (
+                f_adm.result(), f_fs.result(), f_pa.result()
+            )
+        admitted_n = admitted_obs.get["n"]
+        wave_has_cookies = use_jar and parsed_n["cookies"] > 0
+        errors_n = terminal_n + parsed_n["errors"]
+        mark("materialize")
+
+        if live:
+            joined = refs.join(f_img.result(), "image_id")
         else:
             refs = emit_items.select(
                 F.col("url").alias("src_url"),
@@ -824,7 +892,7 @@ class CrawlEngine:
                 F.count(F.lit(1)).alias("urls_scheduled"),
                 F.sum(ok.cast("long")).alias("urls_fetched"),
                 F.countDistinct("host").alias("distinct_hosts"),
-                F.sum((~ok | F.col("status").isNull()).cast("long")).alias("errors"),
+                F.sum(is_failed.cast("long")).alias("errors"),
             )
             .select(
                 F.lit(wave).cast("int").alias("wave"),
@@ -838,29 +906,6 @@ class CrawlEngine:
             )
         )
 
-        # Materialize the persisted frames first, at full stage parallelism
-        # (concurrent count jobs), THEN write from cache with a small file
-        # count: compute parallelism and output file count are decoupled, so
-        # higher core counts never multiply the small files that every later
-        # wave's frontier/seen reads re-list. (Iceberg would get the same
-        # effect from write targets + compaction.)
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_adm = pool.submit(admitted.count)
-            f_fs = pool.submit(fetch_status.count)
-            # Cookie probe rides the same pool: most waves set no cookies,
-            # and the probe lets them skip the jar merge+write entirely.
-            f_ck = (
-                pool.submit(
-                    lambda: parsed.where(F.col("set_cookies").isNotNull())
-                    .limit(1)
-                    .count()
-                )
-                if use_jar
-                else None
-            )
-            admitted_n, _ = f_adm.result(), f_fs.result()
-            wave_has_cookies = bool(f_ck.result()) if f_ck is not None else False
-        mark("materialize")
         # File counts sized from the (now known) row counts: enough tasks to
         # keep big writes parallel, 1 file on the drain tail — the re-read
         # tables never accumulate per-core file explosions either way.
@@ -892,8 +937,6 @@ class CrawlEngine:
         # previous footer-metadata count(*) over the freshly-written files
         # was a separate job serialized after the longest write of the wave
         # — pure per-wave driver floor. observe() rides the write job free.
-        from pyspark.sql import Observation
-
         results_obs = Observation()
         writes = {
             # results: uncoalesced — decode executes inside this write stage
@@ -909,6 +952,8 @@ class CrawlEngine:
             "frontier": admitted.select(*schemas.FRONTIER.fieldNames())
             .unionByName(retry_rows.select(*schemas.FRONTIER.fieldNames()))
             .coalesce(_nfiles(admitted_n)),
+        }
+        if errors_n:
             # repartition(1), NOT coalesce(1): there is no shuffle between
             # the fetch_status/parsed scans and this write, so coalesce(1)
             # made the full wave-wide error filter a single task (a serial
@@ -917,10 +962,14 @@ class CrawlEngine:
             # parallelism and shuffles only the handful of error rows. The
             # sort pins row order inside the one file (round-robin shuffle
             # arrival is nondeterministic) → deterministic bytes on re-run.
-            "errors": errors.repartition(1).sortWithinPartitions(
+            writes["errors"] = errors.repartition(1).sortWithinPartitions(
                 "url_hash", "retry_count", "error_kind"
-            ),
-        }
+            )
+        else:
+            # No error rows, no errors dir (read() returns an empty ERRORS
+            # frame); one left by an aborted attempt at this wave must not
+            # surface once the wave commits.
+            self.store.discard("errors", wave)
         if cfg.dedup:
             writes["seen"] = admitted.select("url_hash").coalesce(_nfiles(admitted_n))
         if host_state_write is not None:
@@ -980,9 +1029,10 @@ class CrawlEngine:
             "timings": timings,
         }
         self.store.commit_wave(wave, stats, state)
-        # Roll the incremental caches forward with this wave's deltas
-        # (lazy checkpoints — materialized by the next wave's first action;
-        # the plan chain stays one wave deep).
+        # Roll the incremental caches forward with this wave's deltas. The
+        # eager=False checkpoints run their shuffle-map stages (the anti-join
+        # and union inputs) here under AQE and their final stage at the next
+        # wave's first action; the plan chain stays one wave deep.
         fields = schemas.FRONTIER.fieldNames()
         wave_keys = wave_df.select("url_hash", "retry_count", "seq")
         self._pending = (

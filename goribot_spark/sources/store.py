@@ -187,12 +187,16 @@ class CrawlStore:
         df.write.mode("overwrite").parquet(self._wave_dir(table, wave))
 
     def append(self, table: str, wave: int, df: DataFrame) -> None:
-        """Additive write within a wave. A wave can produce several
-        increments of the same table (robots_live gets up to three: seed
-        hosts, candidate hosts, image hosts) — ``write``'s overwrite would
-        clobber the earlier increments, losing them from the resumable
-        snapshot even though the in-memory union hides it during the run."""
+        """Additive write within a wave: metrics gets its totals row after
+        the per-partition rows, and robots_live gets one increment per wave
+        (the wave's single robots lookup, or seeding's) — ``write``'s
+        overwrite would clobber an earlier increment."""
         df.write.mode("append").parquet(self._wave_dir(table, wave))
+
+    def discard(self, table: str, wave: int) -> None:
+        """Remove the wave's partition of ``table`` if one exists — for a
+        wave that skips writing the table."""
+        shutil.rmtree(self._wave_dir(table, wave), ignore_errors=True)
 
     def read(self, table: str, upto_wave: int | None = None) -> DataFrame:
         """Union of the compacted base snapshot (if any) and the committed

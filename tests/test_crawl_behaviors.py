@@ -49,6 +49,25 @@ def test_bfs_items_parity(bfs_run):
     assert engine_items_set(eng) == set(sim.items)
 
 
+def test_errors_dir_only_for_waves_with_errors(bfs_run):
+    """A wave writes its errors partition exactly when it has error rows;
+    the errors table keeps the ERRORS schema either way (read() falls back
+    to an empty frame when no wave wrote one)."""
+    import os
+
+    from goribot_spark import schemas
+
+    eng, _ = bfs_run
+    errs = eng.store.read("errors")
+    assert [(f.name, f.dataType) for f in errs.schema] == [
+        (f.name, f.dataType) for f in schemas.ERRORS
+    ]
+    with_rows = {r["wave"] for r in errs.select("wave").distinct().collect()}
+    for w in eng.store.committed_waves():
+        has_dir = os.path.isdir(eng.store.wave_path("errors", w))
+        assert has_dir == (w in with_rows), f"wave {w}"
+
+
 def test_bfs_wave_order_is_by_depth(bfs_run):
     """O1: BFS front advances one depth per wave — a URL at depth d is never
     fetched before wave d, and the un-delayed front reaches depth d exactly

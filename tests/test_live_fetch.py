@@ -11,6 +11,7 @@ from the executors via mapInPandas, no pages/images fixture tables at all.
 from __future__ import annotations
 
 import gzip
+import os
 import shutil
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -407,10 +408,25 @@ def test_live_robots_increments_accumulate(spark, site, tmp_path):
     eng.run()
     hosts = {r["host"] for r in eng.store.read("robots_live").collect()}
     assert {"127.0.0.1", "127.0.0.2", "127.0.0.3"} <= hosts
+    # The /p/multi wave runs ONE robots lookup over its link and image
+    # hosts: both land in that wave's single increment (each append adds
+    # one part file), and each host's robots.txt is requested once.
+    (multi_wave,) = [
+        r["wave"]
+        for r in eng.store.fetch_log().collect()
+        if r["url"] == f"{base}/p/multi"
+    ]
+    inc = eng.store.wave_path("robots_live", multi_wave)
+    assert len([f for f in os.listdir(inc) if f.endswith(".parquet")]) == 1
+    assert {r["host"] for r in spark.read.parquet(inc).collect()} == {
+        "127.0.0.2",
+        "127.0.0.3",
+    }
+    robots_hosts = [h["Host"].split(":")[0] for h in site.seen_headers["/robots.txt"]]
+    assert sorted(robots_hosts) == ["127.0.0.1", "127.0.0.2", "127.0.0.3"]
     # Resume contract: a fresh session on the same run_dir sees the cached
     # rules for ALL three hosts and fetches robots.txt for none of them.
     n_before = len(site.seen_headers["/robots.txt"])
-    assert n_before == 3  # one per host
     eng2 = CrawlEngine(spark, None, run, cfg)
     eng2.seed([f"http://127.0.0.2:{port}/p/0", f"http://127.0.0.3:{port}/p/0"])
     eng2.run()
