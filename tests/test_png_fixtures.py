@@ -156,3 +156,32 @@ def test_fixture_graph_shape(tmp_path):
 
     for p in pages[:10]:
         assert p["url_hash"] == url_hash(p["url"])
+
+
+def test_png_zlib_bomb_bounded():
+    """An 8x8 RGB PNG whose IDAT inflates to 64 MB must end as a decode
+    error without the worker ever holding the inflated bytes: decode_png
+    inflates at most one byte past the size IHDR implies."""
+    import struct
+    import tracemalloc
+    import zlib
+
+    from goribot_spark.functions.imaging import decode_image_bytes
+    from goribot_spark.functions.pngcodec import _SIG, _chunk
+
+    co = zlib.compressobj(9)
+    zeros = bytes(1 << 20)
+    idat = b"".join(co.compress(zeros) for _ in range(64)) + co.flush()
+    ihdr = struct.pack(">IIBBBBB", 8, 8, 8, 2, 0, 0, 0)
+    bomb = _SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
+    assert len(bomb) < 1 << 17
+
+    tracemalloc.start()
+    try:
+        w, h, fmt, ph, err = decode_image_bytes(bomb)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert err is not None and err.startswith("decode_error:")
+    assert (w, h, ph) == (None, None, None)
+    assert peak < 4 << 20, peak
