@@ -16,4 +16,10 @@ is one Spark DAG.
 
 __version__ = "0.1.0"
 
-from goribot_spark.session import get_spark  # noqa: F401
+from goribot_spark import zipguard
+
+# Every Python worker that unpickles an engine UDF imports this package, so
+# this is where the per-task zip-directory re-read is cut (see zipguard).
+zipguard.install()
+
+from goribot_spark.session import get_spark  # noqa: E402, F401

@@ -18,6 +18,11 @@ import numpy as np
 
 _SIG = b"\x89PNG\r\n\x1a\n"
 
+# Largest image decode_png will inflate: 2^25 pixels (e.g. 8192x4096), at
+# most 128 MB of RGBA scanlines. IHDR is checked against it before any
+# inflate, so a declared 65535x65535 costs a decode error, not an OOM.
+MAX_PIXELS = 1 << 25
+
 # BT.601 luma weights — shared by the scalar and batched phash so the two
 # paths run the exact same float64 operations (bit-identical outputs).
 _GRAY_W = np.array([0.299, 0.587, 0.114])
@@ -126,7 +131,15 @@ def decode_png(data: bytes) -> np.ndarray:
     channels = {0: 1, 2: 3, 6: 4}.get(color_type)
     if channels is None:
         raise ValueError(f"unsupported color type {color_type}")
-    raw = zlib.decompress(idat)
+    if not 0 < w * h <= MAX_PIXELS:
+        raise ValueError(f"PNG dimensions {w}x{h} out of bounds")
+    # Inflate at most one byte past the scanline bytes IHDR implies, so a
+    # zlib bomb never allocates more than the declared image.
+    expected = h * (1 + w * channels)
+    inflater = zlib.decompressobj()
+    raw = inflater.decompress(idat, expected + 1)
+    if len(raw) != expected or not inflater.eof:
+        raise ValueError("bad PNG data size")
     arr = _unfilter(raw, w, h, channels).reshape(h, w, channels)
     if channels == 1:
         arr = np.repeat(arr, 3, axis=2)

@@ -49,6 +49,7 @@ TABLES = (
 
 _SCHEMAS = {
     "frontier": schemas.FRONTIER,
+    "consumed": "url_hash long, retry_count int, seq long, wave int",
     "seen": schemas.SEEN,
     "results": schemas.RESULTS,
     "errors": schemas.ERRORS,
@@ -220,13 +221,15 @@ class CrawlStore:
             if through < w <= upto and os.path.isdir(self._wave_dir(table, w))
         ]
         if not dirs:
-            schema = _SCHEMAS.get(table)
-            if table == "consumed":
-                return self.spark.createDataFrame(
-                    [], "url_hash long, retry_count int, seq long, wave int"
-                )
-            return self.spark.createDataFrame([], schema)
+            return self._empty(_SCHEMAS[table])
         return self.spark.read.parquet(*dirs)
+
+    def _empty(self, schema) -> DataFrame:
+        """Zero-partition frame with ``schema``. ``createDataFrame([], …)``
+        is a Python RDD with ``defaultParallelism`` partitions, so every
+        scan of it starts that many Python tasks (0.35 s for a ``count()``
+        against 0.07 s here)."""
+        return self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), schema)
 
     def pending_frontier(self) -> DataFrame:
         """Discovered-but-not-yet-scheduled rows: frontier ⋉̸ consumed.
@@ -289,7 +292,7 @@ class CrawlStore:
         for t in sorted(self._tiers("host_state"), reverse=True):
             if os.path.isdir(self._base_dir("host_state", t)):
                 return self.spark.read.parquet(self._base_dir("host_state", t))
-        return self.spark.createDataFrame([], schemas.HOST_STATE)
+        return self._empty(schemas.HOST_STATE)
 
     def wave_path(self, table: str, wave: int) -> str:
         """Public path accessor for a wave partition (for footer-metadata

@@ -32,6 +32,28 @@ from tests.conftest import crawl, engine_fetched_set, engine_items_set
 SEEDS = ["http://site0.test/p/0", "http://site1.test/p/0"]
 
 
+def test_empty_tables_have_zero_partitions(spark, tmp_path):
+    """A table with no committed data reads as a zero-partition frame with
+    its declared schema: a Python-side empty frame would start one Python
+    task per default-parallelism slot on every scan."""
+    from pyspark.sql.types import StructType
+
+    from goribot_spark import schemas
+
+    store = CrawlStore(spark, str(tmp_path / "run"))
+    consumed = StructType.fromDDL("url_hash long, retry_count int, seq long, wave int")
+    frames = {
+        "errors": (store.read("errors"), schemas.ERRORS),
+        "consumed": (store.read("consumed"), consumed),
+        "robots_live": (store.read("robots_live"), schemas.ROBOTS_RULES),
+        "host_state": (store.host_state(), schemas.HOST_STATE),
+    }
+    for name, (df, schema) in frames.items():
+        assert df.rdd.getNumPartitions() == 0, name
+        assert df.schema == schema, name
+        assert df.count() == 0, name
+
+
 def _sorted_rows(df, cols=None):
     cols = cols or sorted(df.columns)
     rows = [tuple(r[c] for c in cols) for r in df.select(*cols).collect()]

@@ -185,3 +185,28 @@ def test_png_zlib_bomb_bounded():
     assert err is not None and err.startswith("decode_error:")
     assert (w, h, ph) == (None, None, None)
     assert peak < 4 << 20, peak
+
+
+def test_png_size_mismatches_are_decode_errors():
+    """IHDR over the pixel cap, IDAT inflating short or long, and a zlib
+    stream cut before its end each give a decode error, not an exception."""
+    import struct
+    import zlib
+
+    from goribot_spark.functions.imaging import decode_image_bytes
+    from goribot_spark.functions.pngcodec import _SIG, _chunk
+
+    def png(w, h, idat):
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+        return _SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
+
+    raw = bytes(8 * (1 + 8 * 3))
+    assert decode_image_bytes(png(8, 8, zlib.compress(raw)))[:2] == (8, 8)
+    for bad in [
+        png(65535, 65535, zlib.compress(raw)),
+        png(8, 8, zlib.compress(raw[:-1])),
+        png(8, 8, zlib.compress(raw + b"\0")),
+        png(8, 8, zlib.compress(raw)[:-4]),
+    ]:
+        err = decode_image_bytes(bad)[4]
+        assert err is not None and err.startswith("decode_error:"), err
